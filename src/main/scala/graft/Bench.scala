@@ -66,6 +66,46 @@ object Bench {
     s((s.size - 1) / 2) // lower median — robust, no interpolation
   }
 
+  /** Per-entry outcome of [[timedPasses]]: every pass's seconds and
+    * resident growth, and — for an entry that threw in any pass — the
+    * class of its first exception. A failed entry is reported as failed,
+    * never timed as a (fast) pass. */
+  private[graft] final case class PassLog(times: Map[String, Vector[Double]],
+                                          rssDeltaMb: Map[String, Vector[Long]],
+                                          failed: Map[String, String])
+
+  /** `nRuns` passes over `entries`, INTERLEAVED (pass 1 over all entries,
+    * then pass 2, ...): each run is timed, a throw is caught and recorded
+    * with its class (the remaining entries still run), and `afterEach`
+    * runs after every entry (the per-query cache reset). */
+  private[graft] def timedPasses[F](nRuns: Int, entries: Seq[(String, F)])
+                                   (run: F => Unit)(afterEach: () => Unit): PassLog = {
+    val times = scala.collection.mutable.Map.empty[String, Vector[Double]]
+      .withDefaultValue(Vector.empty)
+    val rss = scala.collection.mutable.Map.empty[String, Vector[Long]]
+      .withDefaultValue(Vector.empty)
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    for (_ <- 1 to nRuns; (name, fn) <- entries) {
+      val rssBefore = rssMb
+      val t0 = System.nanoTime()
+      try run(fn) catch {
+        case t: Throwable => if (!failed.contains(name)) failed(name) = t.getClass.getName
+      }
+      val elapsed = (System.nanoTime() - t0) / 1e9
+      val rssAfter = rssMb
+      afterEach()
+      times(name) = times(name) :+ elapsed
+      rss(name) = rss(name) :+ math.max(rssAfter - rssBefore, 0L)
+    }
+    PassLog(times.toMap.withDefaultValue(Vector.empty),
+      rss.toMap.withDefaultValue(Vector.empty), failed.toMap)
+  }
+
+  /** JSON object of failed entries → exception class. */
+  private[graft] def failedJson(failed: Map[String, String]): String =
+    failed.toSeq.sortBy(_._1).map { case (n, c) => "\"" + n + "\":\"" + c + "\"" }
+      .mkString("{", ",", "}")
+
   /** The README §"Strategy comparison" rows — the reference's README §3
     * evaluation axes (one entry per search strategy). */
   val StrategyEntries: Seq[String] = Seq(
@@ -145,16 +185,16 @@ object Bench {
       SparkEntry.queries.filter { case (n, _) => names(n) }).toSeq.sortBy(_._1)
     // Warm-up pass at the smallest SF: JIT-compiles the codegen'd stages so
     // the timed passes measure steady-state throughput, not JVM warmup.
+    // A warm-up failure marks the entry failed as well: every entry must
+    // run at any sf.
     val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
-      selected.foreach { case (_, fn) =>
-        try run(fn, warmDir) catch { case _: Throwable => () }
-      }
-      spark.catalog.clearCache()
-    }
+    val warmFailed =
+      if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
+        val warm = timedPasses(1, selected)(run(_, warmDir))(() => ())
+        spark.catalog.clearCache()
+        warm.failed
+      } else Map.empty[String, String]
     val loadBefore = loadAvg
-    val times = scala.collection.mutable.Map.empty[String, Vector[Double]]
-      .withDefaultValue(Vector.empty)
     // per-entry resident GROWTH: VmRSS delta across the pass, sampled
     // against the post-clearCache baseline of the previous entry (ADVICE
     // r6: the absolute post-pass RSS in one shared interleaved JVM mostly
@@ -163,21 +203,17 @@ object Bench {
     // transients a mid-pass GC reclaims — the TRUE per-strategy peak
     // comes from SPARK_GRAFT_BENCH_ISOLATE's fresh-JVM VmHWM runs, which
     // the README strategy table uses.
-    val rss = scala.collection.mutable.Map.empty[String, Vector[Long]]
-      .withDefaultValue(Vector.empty)
-    for (_ <- 1 to nRuns; (name, fn) <- selected) {
-      val rssBefore = rssMb
-      val t0 = System.nanoTime()
-      try run(fn, sfDir) catch { case _: Throwable => () }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      val rssAfter = rssMb
+    val timed = timedPasses(nRuns, selected)(run(_, sfDir)) { () =>
       spark.catalog.clearCache() // per-query caches must not leak across timings
-      times(name) = times(name) :+ elapsed
-      rss(name) = rss(name) :+ math.max(rssAfter - rssBefore, 0L)
     }
     val loadAfter = loadAvg
+    val failed = timed.failed ++ warmFailed
+    val times = timed.times
+    val rss = timed.rssDeltaMb
     val med = selected.map { case (name, _) => name -> median(times(name)) }
     val mins = selected.map { case (name, _) => name -> times(name).min }.toMap
+    // failed entries stay out of every total: a throw is not a timing
+    val counted = med.filterNot { case (name, _) => failed.contains(name) }
     // stall signature: even the median is >3× the entry's own best pass —
     // the run contains host-stall contamination; report both numbers
     val stalled = med.collect {
@@ -185,9 +221,9 @@ object Bench {
     }
     def fmtQ(pairs: Seq[(String, Double)]): String =
       pairs.map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
-    val total = med.map(_._2).sum
-    val totalMin = mins.values.sum
-    val classes = med.groupBy { case (k, _) => classOf(k) }
+    val total = counted.map(_._2).sum
+    val totalMin = counted.map { case (name, _) => mins(name) }.sum
+    val classes = counted.groupBy { case (k, _) => classOf(k) }
       .toSeq.sortBy(_._1)
       .map { case (c, m) =>
         s""""$c":{"sec":${f3(m.map(_._2).sum)},"n":${m.size}}""" }
@@ -201,11 +237,12 @@ object Bench {
       val v = rss(name).sorted
       "\"" + name + "\":" + (if (v.isEmpty) -1L else v((v.size - 1) / 2))
     }.mkString("{", ",", "}")
+    val failedObj = failedJson(failed)
     val line = s"""{"metric":"total","value":${f3(total)},"unit":"sec"""" +
       s""","queries":${fmtQ(med)},"classes":$classes""" +
       s""","n_runs":$nRuns,"total_min":${f3(totalMin)},"stalled":$stalledJson""" +
       s""","rss_mb":$rssMb,"vmhwm_mb":$vmHwmMb,"loadavg":[${f3(loadBefore)},${f3(loadAfter)}]""" +
-      s""","sf":"$sfDir"}"""
+      s""","sf":"$sfDir","failed":$failedObj}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile),
       s"""{"runs":$full,"medians":${fmtQ(med)},"rss_delta_mb_entries":$rssJson,"summary":$line}""")
     catch { case _: Throwable => () }
@@ -222,7 +259,9 @@ object Bench {
       s""","classes":$classes,"n_runs":$nRuns,"total_min":${f3(totalMin)}""" +
       s""","stalled":$stalledJson,"rss_mb":$rssMb,"vmhwm_mb":$vmHwmMb""" +
       s""","loadavg":[${f3(loadBefore)},${f3(loadAfter)}],"sf":"$sfDir"""" +
-      s""","bench_file":"$outFile"}""")
+      s""","bench_file":"$outFile","failed":$failedObj}""")
     spark.stop()
+    // a run with a failing entry must not read as a clean bench
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

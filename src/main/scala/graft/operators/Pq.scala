@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Column, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Column, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 import org.apache.spark.sql.execution.{exchange, FileSourceScanExec, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import graft.functions.{pq, scaled, vectors}
 
 /** Product quantization (IVF-PQ style) — the canonical 100 TB vector-
@@ -26,8 +29,10 @@ import graft.functions.{pq, scaled, vectors}
   *    R-row rerank.
   *
   * All sub-distances are squared L2 computed as an explicit left-assoc
-  * 8-term sum (no sqrt, no engine aggregation-order ambiguity), scaled to
-  * BIGINT per the repo convention. */
+  * subDim-term sum (no sqrt, no engine aggregation-order ambiguity), scaled
+  * to BIGINT per the repo convention. The SQL form ([[sqDistExpr]]), the
+  * driver ADC kernel ([[adcTds]]) and the streaming HOF form
+  * ([[adcTableCol]]) share that term order, so they agree bit for bit. */
 object Pq {
 
   /** (m, code, cw): KMeans-trained codewords — real Lloyd's over every
@@ -156,15 +161,7 @@ object Pq {
     // stored frame instead, the exactRerankBatch convention
     val codes = encodeIntCols(qall.filter(col("vec_id") =!= qid), cb, numSub,
       subDim, carry = Seq("vec_id"), vecCol = "q")
-    val td: Map[(Int, Long), Long] = cb.map { case (m, c, cw) =>
-      var acc = 0L; var j = 0
-      while (j < subDim) { val d = qv(m * subDim + j) - cw(j); acc += d * d; j += 1 }
-      (m, c) -> acc
-    }.toMap
-    val adistExpr = (0 until numSub).map { m =>
-      val tds = cb.filter(_._1 == m).sortBy(_._2).map { case (_, c, _) => s"${td((m, c))}L" }
-      s"element_at(array(${tds.mkString(", ")}), CAST(code_$m AS INT) + 1)"
-    }.mkString(" + ")
+    val adistExpr = adistLookupExpr(residualAdc(qv, cb, numSub, subDim), numSub)
     val qLit = s"array(${qv.map(v => s"${v}L").mkString(", ")})"
     val short = codes.selectExpr("vec_id", s"CAST($adistExpr AS BIGINT) AS adist")
       .orderBy(col("adist").asc, col("vec_id").asc).limit(shortlist)
@@ -295,21 +292,22 @@ object Pq {
     encodeIntCols(members, model.cb, numSub, subDim, carry = carry, vecCol = "r")
   }
 
-  /** One (query, cluster) td table: tds(m)(code) = ||qr_sub − cw||², exact
+  /** One integer td table — per (query, cluster) residual, or the raw
+    * query of [[searchRerankInt]]: tds(m)(code) = ||qr_sub − cw||², exact
     * integer arithmetic both engines replay. */
   private def residualAdc(qr: Array[Long], cb: Seq[(Int, Long, Array[Long])],
-                          numSub: Int, subDim: Int): IndexedSeq[IndexedSeq[Long]] =
-    (0 until numSub).map { m =>
+                          numSub: Int, subDim: Int): Array[Array[Long]] =
+    Array.tabulate(numSub) { m =>
       cb.filter(_._1 == m).sortBy(_._2).map { case (_, _, cw) =>
         var acc = 0L; var j = 0
         while (j < subDim) { val d = qr(m * subDim + j) - cw(j); acc += d * d; j += 1 }
         acc
-      }.toIndexedSeq
-    }.toIndexedSeq
+      }.toArray
+    }
 
   /** Literal element_at lookup summing the M subspace td's over bound
     * code_0..code_{M−1} columns. */
-  private def adistLookupExpr(tds: IndexedSeq[IndexedSeq[Long]], numSub: Int): String =
+  private def adistLookupExpr(tds: Array[Array[Long]], numSub: Int): String =
     (0 until numSub).map { m =>
       val vals = tds(m).map(v => s"${v}L").mkString(", ")
       s"element_at(array($vals), CAST(code_$m AS INT) + 1)"
@@ -385,7 +383,7 @@ object Pq {
       .select("vec_id", "q").collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toMap
     // absent query ids must refuse loudly, not silently drop from the
-    // answer set (the adcTables convention)
+    // answer set (the adistCols convention)
     require(qids.forall(qvs.contains),
       s"ivfpqResidualBatch: query ids absent from the corpus: " +
         qids.filterNot(qvs.contains).mkString(", "))
@@ -398,7 +396,7 @@ object Pq {
     val codes = Dedup.materialize(residualCodes(qe, model, unionLabels,
       numSub, subDim, carry = Seq("vec_id", "label")))
     // per-(query, probed cluster) ADC literal tables
-    val adcByQL: Map[(Long, Long), IndexedSeq[IndexedSeq[Long]]] =
+    val adcByQL: Map[(Long, Long), Array[Array[Long]]] =
       (for { qid <- qids; l <- probedByQ(qid) } yield {
         val qr = Array.tabulate(qvs(qid).length)(i => qvs(qid)(i) - model.cent(l)(i))
         (qid, l) -> residualAdc(qr, model.cb, numSub, subDim)
@@ -526,14 +524,13 @@ object Pq {
       .selectExpr("code", s"explode(sequence(0, ${numSub - 1})) AS m", "v")
       .selectExpr("m", "code", s"slice(v, m * $subDim + 1, $subDim) AS cw")
 
-  /** round(||v_sub − cw||² · 10⁴): explicit per-dim terms in fixed order so
-    * both engines sum bit-identically. `vecExpr` is indexed through the
-    * subspace offset (column `m`); `subExpr` is the codeword. */
-  private def sqDistExpr(vecExpr: String, subExpr: String, subDim: Int,
-                         offset: Boolean): String = {
+  /** floor(||v_sub − cw||² · 10⁴): explicit per-dim terms in fixed order so
+    * both engines sum bit-identically (the [[adcTds]] kernel runs the same
+    * order on the driver). `vecExpr` is indexed through the subspace
+    * offset (column `m`); `subExpr` is the codeword. */
+  private def sqDistExpr(vecExpr: String, subExpr: String, subDim: Int): String = {
     val terms = (1 to subDim).map { i =>
-      val x = if (offset) s"element_at($vecExpr, m * $subDim + $i)"
-              else s"element_at($vecExpr, $i)"
+      val x = s"element_at($vecExpr, m * $subDim + $i)"
       val diff = s"($x - element_at($subExpr, $i))"
       s"$diff * $diff"
     }
@@ -547,16 +544,53 @@ object Pq {
     * code via lexicographic struct-min, matching the oracle's min-join. */
   def encode(body: DataFrame, codebook: DataFrame, subDim: Int): DataFrame =
     body.crossJoin(broadcast(codebook))
-      .selectExpr("vec_id", "m", "code", s"${sqDistExpr("v", "cw", subDim, offset = true)} AS d")
+      .selectExpr("vec_id", "m", "code", s"${sqDistExpr("v", "cw", subDim)} AS d")
       .groupBy("vec_id", "m")
       .agg(min(struct(col("d"), col("code"))).as("best"))
       .selectExpr("vec_id", "m", "best.code AS code")
 
-  /** (m, code, td): the query's ADC lookup table (one row per codeword). */
-  def adcTable(query: DataFrame, codebook: DataFrame, subDim: Int): DataFrame =
-    codebook.crossJoin(broadcast(query))
-      .selectExpr("m", "code", s"slice(qv, m * $subDim + 1, $subDim) AS qsub", "cw")
-      .selectExpr("m", "code", s"${sqDistExpr("qsub", "cw", subDim, offset = false)} AS td")
+  /** The ADC kernel — one query's lookup table, computed on the driver:
+    * tds(m)(c) = floor((Σᵢ (qv[m·subDim+i] − cw[i])²) · 10⁴) for the c-th
+    * lowest code of subspace m. The table is |Q|·M·K model state, so it is
+    * built where the query vectors already are, without a Spark job. The
+    * sum runs left to right from +0.0 in IEEE doubles, the term order of
+    * [[sqDistExpr]] and [[adcTableCol]], so every value is bit-identical
+    * to theirs (spec-pinned). Every float ADC site (single-query, literal
+    * batch, joined wide/sharded/external) uses this kernel. */
+  def adcTds(qv: Array[Double], cbRows: Array[(Int, Long, Array[Double])],
+             numSub: Int, subDim: Int): Array[Array[Long]] = {
+    requireQueryVec(qv, numSub, subDim, "adcTds")
+    Array.tabulate(numSub) { m =>
+      cbRows.filter(_._1 == m).sortBy(_._2).map { case (_, _, cw) =>
+        var acc = 0.0; var i = 0
+        while (i < subDim) { val d = qv(m * subDim + i) - cw(i); acc += d * d; i += 1 }
+        math.floor(acc * 10000.0).toLong
+      }
+    }
+  }
+
+  /** A query vector the ADC kernel can read: non-null (a null component
+    * arrives as a null vector) and numSub·subDim wide — refused by name
+    * here, not later as an index error deep inside a scan. */
+  private def requireQueryVec(qv: Array[Double], numSub: Int, subDim: Int,
+                              who: String): Unit = {
+    require(qv != null, s"$who: null query vector (or a null component)")
+    require(qv.length == numSub * subDim,
+      s"$who: query vector has ${qv.length} components, the codebook " +
+        s"expects numSub·subDim = ${numSub * subDim}")
+  }
+
+  /** Collect a model-state-sized (q_id BIGINT, qv ARRAY<DOUBLE>) frame
+    * in one action, validating every vector ([[requireQueryVec]]). */
+  private def collectQueryVecs(qvs: DataFrame, numSub: Int, subDim: Int,
+                               who: String): Array[(Long, Array[Double])] =
+    qvs.collect().map { r =>
+      val v = if (r.isNullAt(1)) null else r.getSeq[Any](1)
+      val qv = if (v == null || v.contains(null)) null
+               else v.map(_.asInstanceOf[Double]).toArray
+      requireQueryVec(qv, numSub, subDim, s"$who (q_id ${r.getLong(0)})")
+      r.getLong(0) -> qv
+    }
 
   /** Scan-speed encode: the codebook is k·d MODEL STATE (like KMeans
     * centroids), so it rides along as a reference object inside the
@@ -636,8 +670,12 @@ object Pq {
     val leafParts = leaves.map {
       case f: FileSourceScanExec => f.inputRDDs().map(_.getNumPartitions).sum
       case r: RDDScanExec => r.rdd.getNumPartitions
-      case _ => 1 // unknown leaf (cached relation, local rows): treat as
-                  // degenerate — same spread decision as before r18
+      // a loaded cache holds exactly the partitions its buffers were
+      // built with — driver metadata too
+      case i: InMemoryTableScanExec if i.relation.cacheBuilder.isCachedColumnBuffersLoaded =>
+        i.relation.cacheBuilder.cachedColumnBuffers.getNumPartitions
+      case _ => 1 // unknown leaf (local rows, a cache not yet built, whose
+                  // count only building it would tell): spread
     }.sum.max(1)
     val spark = body.sparkSession
     val current =
@@ -707,11 +745,10 @@ object Pq {
     // codegen'd projection — see encodeFast
     val cbRows = cb.collect().map(r =>
       (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-    val qv = cast.filter(col("vec_id") === qid).select(col("v").as("qv"))
-    // td values computed BY Spark (one 512-row job), so the literal table
-    // is bit-identical to the joined form in both engines
-    val td = adcTable(qv, cb, subDim).collect()
-      .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val qv = collectQueryVecs(cast.filter(col("vec_id") === qid)
+      .selectExpr("vec_id AS q_id", "v AS qv"), numSub, subDim, "pq search")
+    require(qv.nonEmpty, s"pq search: query id $qid absent from the corpus")
+    val tds = adcTds(qv.head._2, cbRows, numSub, subDim)
     // TWO small codegen'd steps, not one giant expression. A single fused
     // adist expression (argmin inlined into the td lookup, ~8× the size of
     // one code expression) is too deep for janino: whole-stage codegen
@@ -725,7 +762,7 @@ object Pq {
     // run INTERPRETED per comparison. The materialized relation is the
     // ~(8·8B codes + id) per row any PQ index stores anyway.
     val codes = Dedup.materialize(encodeFast(body, cbRows, numSub, subDim))
-    adcServe(codes, emb, qid, cbRows, td, k, numSub, shortlist)
+    adcServe(codes, emb, qid, tds, k, numSub, shortlist)
   }
 
   /** The serve tail shared by the inline-encode path (`searchRerankCb`)
@@ -736,14 +773,9 @@ object Pq {
     * bound code columns, whole-stage codegen'd. (A CASE-key form desugars
     * to per-branch EqualTo copies of the key, duplicating the lookup 64×.) */
   private def adcServe(codes: DataFrame, emb: DataFrame, qid: Long,
-                       cbRows: Array[(Int, Long, Array[Double])],
-                       td: Map[(Int, Long), Long],
+                       tds: Array[Array[Long]],
                        k: Int, numSub: Int, shortlist: Int): DataFrame = {
-    val adistExpr = (0 until numSub).map { m =>
-      val tds = cbRows.filter(_._1 == m).sortBy(_._2)
-        .map { case (_, c, _) => s"${td((m, c))}L" }
-      s"element_at(array(${tds.mkString(", ")}), CAST(code_$m AS INT) + 1)"
-    }.mkString(" + ")
+    val adistExpr = adistLookupExpr(tds, numSub)
     val short = codes
       .selectExpr("vec_id", s"CAST($adistExpr AS BIGINT) AS adist")
       .orderBy(col("adist").asc, col("vec_id").asc).limit(shortlist)
@@ -890,28 +922,27 @@ object Pq {
   def searchPersisted(s: SparkSession, path: String, emb: DataFrame,
                       qid: Long, k: Int, numSub: Int, subDim: Int,
                       shortlist: Int): DataFrame = {
-    val (cb, cbRows) = restoreCodebook(s, path, numSub, subDim)
+    val (_, cbRows) = restoreCodebook(s, path, numSub, subDim)
     val codes = s.read.parquet(s"$path/codes")
     val expectCols = "vec_id" +: (0 until numSub).map(m => s"code_$m")
     require(codes.columns.sameElements(expectCols),
       s"pq restore: code table at $path has columns ${codes.columns.mkString(",")}, " +
         s"expected ${expectCols.mkString(",")}")
-    val qv = emb.filter(col("vec_id") === qid)
-      .selectExpr("CAST(embedding AS ARRAY<DOUBLE>) AS qv")
     // ADVICE r14: an absent qid would empty the entry AND its oracle and
     // the hash gate would pass vacuously — refuse loudly instead (the
     // requireQueryPresent convention, on the operator side so every
-    // persisted-serve entry at every width inherits it). The ADC collect
-    // crossJoins the non-empty codebook against the query, so an empty
-    // table ⟺ the qid is absent — one action serves both the guard and
-    // the serve (ADVICE r15: the separate limit(1).count() paid an extra
-    // job per serve on the hot path).
-    val td = adcTable(qv, cb, subDim).collect()
-      .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    require(td.nonEmpty,
+    // persisted-serve entry at every width inherits it). The query-vector
+    // collect the ADC kernel needs anyway is the presence check — one
+    // action serves both (ADVICE r15: a separate limit(1).count() paid an
+    // extra job per serve on the hot path).
+    val qv = collectQueryVecs(emb.filter(col("vec_id") === qid)
+      .selectExpr("vec_id AS q_id", "CAST(embedding AS ARRAY<DOUBLE>) AS qv"),
+      numSub, subDim, "pq persisted serve")
+    require(qv.nonEmpty,
       s"pq persisted serve: query id $qid absent from the corpus — the " +
         "gate would pass vacuously on two empty frames")
-    adcServe(codes.filter(col("vec_id") =!= qid), emb, qid, cbRows, td, k, numSub, shortlist)
+    val tds = adcTds(qv.head._2, cbRows, numSub, subDim)
+    adcServe(codes.filter(col("vec_id") =!= qid), emb, qid, tds, k, numSub, shortlist)
   }
 
   /** BATCHED PQ search (r7 verdict "next" #2): the reference's main loop is
@@ -947,13 +978,13 @@ object Pq {
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
     // ADC tables FIRST (they carry the absent-query-id guard and need no
     // encode) so a bad query set refuses before the corpus pays anything
-    val td = adcTables(emb, qids, cbRows, subDim)
+    val adist = adistCols(emb, qids, cbRows, numSub, subDim)
     // ONE encode pass over the (keep-pruned) corpus — query rows included
     // when unfiltered (each is corpus for the other queries); same
     // janino-depth split as the single-query path
     val codes = Dedup.materialize(encodeFast(cast, cbRows, numSub, subDim))
     val short = codes
-      .selectExpr(Seq("vec_id") ++ adistCols(qids, cbRows, td, numSub): _*)
+      .selectExpr(Seq("vec_id") ++ adist: _*)
       .selectExpr("vec_id", stackExpr(qids))
       .filter(col("vec_id") =!= col("q_id"))
       .groupBy("q_id")
@@ -983,95 +1014,43 @@ object Pq {
         "query would double-join every code row; dedupe the query file")
   }
 
-  /** The joined-ADC form of [[adcTables]] (r8 verdict next #1): ALL
-    * queries' td tables as ONE broadcastable relation (q_id, tds) with
+  /** The joined-ADC counterpart of [[adistCols]] (r8 verdict next #1):
+    * ALL queries' td tables as ONE broadcastable relation (q_id, tds) with
     * tds[m+1][code+1] = ||q_sub − cw||² — plan size O(1) in |Q|, so one
     * code scan serves a query file of ANY size up to [[WideBatchCap]]
-    * (the literal [[adistCols]] columns cap at 64 queries per pass).
-    * Computed BY Spark with the exact [[sqDistExpr]] arithmetic (the
-    * searchRerank convention), grouped to nested code-ordered arrays,
-    * materialized once. Carries the absent-query-id guard. */
+    * (the literal adist columns cap at 64 queries per pass).
+    * One collect of the query vectors feeds the absent-query-id guard and
+    * the [[adcTds]] kernel. The |Q| cap is the caller's: the single-pass
+    * forms check it at entry, and the sharded drivers broadcast only
+    * ≤ cap-row slices of one whole-file relation. */
   def adcRelation(emb: DataFrame, qids: Seq[Long],
                   cbRows: Array[(Int, Long, Array[Double])],
-                  subDim: Int): DataFrame = {
-    requireWideQids(qids, "adcRelation")
-    val qvs = emb.filter(col("vec_id").isin(qids: _*))
-      .selectExpr("vec_id AS q_id", "CAST(embedding AS ARRAY<DOUBLE>) AS qv")
-    val rel = adcRelationOf(qvs, cbRows, subDim)
+                  numSub: Int, subDim: Int): DataFrame = {
+    val qs = collectQueryVecs(emb.filter(col("vec_id").isin(qids: _*))
+      .selectExpr("vec_id AS q_id", "CAST(embedding AS ARRAY<DOUBLE>) AS qv"),
+      numSub, subDim, "joined-ADC batch")
     // a query id absent from the corpus would silently vanish from the
-    // answer set — refuse loudly (the adcTables convention)
-    val present = rel.select("q_id").collect().map(_.getLong(0)).toSet
+    // answer set — refuse loudly (the adistCols convention)
+    val present = qs.map(_._1).toSet
     val missing = qids.filterNot(present)
     require(missing.isEmpty,
       s"joined-ADC batch: query ids absent from the corpus: ${missing.mkString(", ")}")
-    rel
+    adcLocalRelation(emb.sparkSession, qs, cbRows, numSub, subDim)
   }
 
-  /** [[adcRelation]] for a SHARDED driver's whole query file: same
-    * duplicate/absent-id guards, but no per-pass |Q| cap — the relation
-    * is materialized once for every chunk and only per-chunk SLICES
-    * (≤ cap rows each) are ever broadcast, so the broadcast ceiling the
-    * cap protects still binds per pass. One materialize + one guard
-    * collect for the whole file instead of one per chunk. */
-  private def adcRelationSharded(emb: DataFrame, qids: Seq[Long],
-                                 cbRows: Array[(Int, Long, Array[Double])],
-                                 subDim: Int): DataFrame = {
-    val qvs = emb.filter(col("vec_id").isin(qids: _*))
-      .selectExpr("vec_id AS q_id", "CAST(embedding AS ARRAY<DOUBLE>) AS qv")
-    val rel = adcRelationOf(qvs, cbRows, subDim)
-    val present = rel.select("q_id").collect().map(_.getLong(0)).toSet
-    val missing = qids.filterNot(present)
-    require(missing.isEmpty,
-      s"joined-ADC batch: query ids absent from the corpus: ${missing.mkString(", ")}")
-    rel
-  }
-
-  /** The shared joined-ADC pipeline over a resolved (q_id, qv DOUBLE[])
-    * frame — [[adcRelation]] (query-by-indexed-item) and
-    * [[adcRelationFromQueries]] (external query frame) differ only in how
-    * the query vectors arrive. */
-  private def adcRelationOf(qvs: DataFrame,
-                            cbRows: Array[(Int, Long, Array[Double])],
-                            subDim: Int): DataFrame = {
-    val cbDf = qvs.sparkSession.createDataFrame(
-      cbRows.toIndexedSeq.map { case (m, c, cw) => (m, c, cw.toSeq) })
-      .toDF("m", "code", "cw")
-    Dedup.materialize(cbDf.crossJoin(broadcast(qvs))
-      .selectExpr("q_id", "m", "code",
-        s"slice(qv, m * $subDim + 1, $subDim) AS qsub", "cw")
-      .selectExpr("q_id", "m", "code",
-        s"${sqDistExpr("qsub", "cw", subDim, offset = false)} AS td")
-      .groupBy("q_id", "m")
-      .agg(sort_array(collect_list(struct(col("code"), col("td")))).as("bym"))
-      .selectExpr("q_id", "m", "transform(bym, x -> x.td) AS tda")
-      .groupBy("q_id")
-      .agg(sort_array(collect_list(struct(col("m"), col("tda")))).as("byq"))
-      .selectExpr("q_id", "transform(byq, x -> x.tda) AS tds"))
-  }
-
-  /** The EXTERNAL-query form of [[adcRelation]] (r11 verdict next #5):
-    * queries arrive as their own (q_id, q_vec) frame — the reference's
-    * actual demo shape, where `query.jpg` is embedded at serve time and
-    * is NOT an indexed corpus row (acorn.py __main__). No corpus-presence
-    * guard applies (presence is definitional: every frame row IS a
-    * query); the duplicate/empty/cap guards still do, post-materialize. */
-  def adcRelationFromQueries(queries: DataFrame,
-                             cbRows: Array[(Int, Long, Array[Double])],
-                             subDim: Int): DataFrame = {
-    // guards run on the INPUT frame, before the pipeline's groupBy would
-    // silently MERGE duplicate q_ids into one row with doubled (code, td)
-    // entries — corrupting every positional tds lookup downstream; the
-    // frame is model-state-sized, so the guard collect is one tiny job
-    val ids = queries.select("q_id").collect().map(_.getLong(0))
-    require(ids.nonEmpty, "external-query batch: empty query frame")
-    require(ids.distinct.length == ids.length,
-      "external-query batch: duplicate q_ids: " +
-        ids.diff(ids.distinct).distinct.mkString(", "))
-    require(ids.length <= WideBatchCap,
-      s"external-query batch: |Q|=${ids.length} exceeds $WideBatchCap — " +
-        "shard the query frame across passes")
-    val qvs = queries.selectExpr("q_id", "CAST(q_vec AS ARRAY<DOUBLE>) AS qv")
-    adcRelationOf(qvs, cbRows, subDim)
+  /** The (q_id, tds) relation over collected query vectors — a local
+    * relation of |Q|·M·K longs (never a Spark job to build), broadcast by
+    * the scan that joins it. */
+  private def adcLocalRelation(spark: SparkSession, qs: Seq[(Long, Array[Double])],
+                               cbRows: Array[(Int, Long, Array[Double])],
+                               numSub: Int, subDim: Int): DataFrame = {
+    val rows = qs.map { case (id, qv) =>
+      Row(id, adcTds(qv, cbRows, numSub, subDim).map(_.toSeq).toSeq)
+    }
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("q_id", LongType),
+      StructField("tds", ArrayType(ArrayType(LongType, containsNull = false),
+        containsNull = false)))))
   }
 
   /** Sum of M nested-array lookups over the joined `tds` column — constant
@@ -1091,7 +1070,7 @@ object Pq {
     * ≤ P·|Q|·R rows cross the only shuffle) — then the shared broadcast
     * exact rerank. ONE corpus scan at any |Q| ≤ [[WideBatchCap]]; a 10⁴-
     * query eval pays ⌈10⁴/4096⌉ = 3 scans instead of the literal form's
-    * 157. Same Spark-computed td values, same tie-breaks ⇒ per-query
+    * 157. Same [[adcTds]] values, same tie-breaks ⇒ per-query
     * results IDENTICAL to searchRerank (spec-pinned). The literal form
     * stays preferable below its cap (no join in the scan); this is the
     * scale path for the reference's unbounded query files. */
@@ -1106,7 +1085,7 @@ object Pq {
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
     // ADC relation FIRST (it carries the absent-id guard): refuse before
     // the corpus pays the encode — the batch-family convention
-    val adc = adcRelation(emb, qids, cbRows, subDim)
+    val adc = adcRelation(emb, qids, cbRows, numSub, subDim)
     val codes = Dedup.materialize(encodeFast(cast, cbRows, numSub, subDim))
     exactRerankBatch(emb,
       wideAdcShortlist(codes, adc, numSub, shortlist, excludeSelf = true),
@@ -1140,7 +1119,7 @@ object Pq {
     * corpus (query.jpg, acorn.py __main__). Queries arrive as their own
     * (q_id, q_vec ARRAY<FLOAT>) frame; the proof this machinery never
     * secretly depended on the query being indexed: the ADC relation
-    * derives from the frame ([[adcRelationFromQueries]]), NO
+    * derives from the frame, NO
     * self-exclusion applies (an external query has no corpus row to
     * exclude), and the exact rerank joins the frame's raw vectors. Same
     * one-code-scan / map-side-k-heap / broadcast-rerank shapes as
@@ -1154,15 +1133,28 @@ object Pq {
                                     cb: Option[Array[(Int, Long, Array[Double])]] = None,
                                     codes0: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.functions.posexplode
+    // ONE collect of the (model-state-sized) frame feeds the vector,
+    // empty, duplicate and cap guards and then the ADC kernel; the guards
+    // refuse before the corpus pays anything (the codebook collect, the
+    // encode) — the batch-family convention. No corpus-presence guard
+    // applies: every frame row IS a query.
+    val qs = collectQueryVecs(
+      queries.selectExpr("q_id", "CAST(q_vec AS ARRAY<DOUBLE>) AS qv"),
+      numSub, subDim, "external-query batch")
+    val ids = qs.map(_._1)
+    require(ids.nonEmpty, "external-query batch: empty query frame")
+    require(ids.distinct.length == ids.length,
+      "external-query batch: duplicate q_ids: " +
+        ids.diff(ids.distinct).distinct.mkString(", "))
+    require(ids.length <= WideBatchCap,
+      s"external-query batch: |Q|=${ids.length} exceeds $WideBatchCap — " +
+        "shard the query frame across passes")
     // `cb`/`codes0` let a sharded driver thread ONE codebook collection
     // and ONE materialized code table across every pass (shards share
     // model state instead of re-deriving it); absent, build them here
     val cbRows = cb.getOrElse(seededCodebook(emb, numSub, subDim, numCodes).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray)))
-    // ADC relation FIRST (it carries the duplicate/empty/cap guards):
-    // refuse before the corpus pays the encode — the batch-family
-    // convention
-    val adc = adcRelationFromQueries(queries, cbRows, subDim)
+    val adc = adcLocalRelation(emb.sparkSession, qs, cbRows, numSub, subDim)
     val codes = codes0.getOrElse {
       val cast0 = emb.selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS v")
       val cast = keep.fold(cast0)(ids => cast0.join(ids, "vec_id"))
@@ -1245,7 +1237,7 @@ object Pq {
   }
 
   /** One arriving query's WHOLE ADC table as a projection column — the
-    * streaming counterpart of [[adcRelationOf]] for widths where
+    * streaming counterpart of [[adcTds]] for widths where
     * [[adcDistCol]]'s inlined M·subDim-term tree would dwarf the plan
     * (16×128 = 2048 terms per candidate ROW at d=2048):
     * `tds[m+1][code+1] = floor(Σᵢ (qv[m·subDim+i] − cw[i])² · 10⁴)`,
@@ -1313,7 +1305,7 @@ object Pq {
     * unioned. Every q_id lands in exactly one shard, so per-query
     * results are IDENTICAL to a single wide pass (spec-pinned with a
     * small cap); shards share the pass-INVARIANT model state — the
-    * (deterministic, seeded) codebook, the materialized all-queries ADC
+    * (deterministic, seeded) codebook, the all-queries ADC
     * relation, and the ONE encoded code table (encode is query-
     * independent, so re-encoding per chunk multiplied the corpus's
     * dominant per-row kernel by the shard count for bit-identical
@@ -1334,7 +1326,7 @@ object Pq {
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
     // ADC relation FIRST (it carries the absent-id guard): refuse before
     // the corpus pays the encode — the batch-family convention
-    val adcAll = adcRelationSharded(emb, qids, cbRows, subDim)
+    val adcAll = adcRelation(emb, qids, cbRows, numSub, subDim)
     val codes = Dedup.materialize(encodeFast(cast, cbRows, numSub, subDim))
     shardedWide(qids, cap, who) { chunk =>
       val adc = adcAll.filter(col("q_id").isin(chunk: _*))
@@ -1367,8 +1359,12 @@ object Pq {
       s"$who: cap=$cap must be in [1, $WideBatchCap] " +
         "— the broadcast ADC relation ceiling binds per pass")
     // the frame is model-state-sized (query files, not corpus); one tiny
-    // collect validates the WHOLE frame before any corpus work
-    val ids = queries.select("q_id").collect().map(_.getLong(0))
+    // collect validates the WHOLE frame before any corpus work and feeds
+    // the ADC kernel
+    val qs = collectQueryVecs(
+      queries.selectExpr("q_id", "CAST(q_vec AS ARRAY<DOUBLE>) AS qv"),
+      numSub, subDim, who)
+    val ids = qs.map(_._1)
     require(ids.nonEmpty, s"$who: empty query frame")
     val dups = ids.diff(ids.distinct).distinct
     require(dups.isEmpty,
@@ -1376,17 +1372,15 @@ object Pq {
         "a duplicate split across shards would double-answer in the union")
     val cbRows = seededCodebook(emb, numSub, subDim, numCodes).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-    // the code table AND the all-queries ADC relation are pass-invariant:
-    // encode once, derive every query's td table in ONE materialize, and
-    // let each pass broadcast only its own ≤cap-row ADC slice (r17
-    // optimization, guide §1.2 — the per-pass form re-encoded the corpus
-    // and re-collected per-chunk guards for identical output)
+    // the all-queries ADC relation AND the code table are pass-invariant:
+    // derive every query's td table once, encode once, and let each pass
+    // broadcast only its own ≤cap-row ADC slice (r17 optimization, guide
+    // §1.2 — the per-pass form re-encoded the corpus and re-collected
+    // per-chunk guards for identical output)
+    val adcAll = adcLocalRelation(emb.sparkSession, qs, cbRows, numSub, subDim)
     val cast0 = emb.selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS v")
     val cast = keep.fold(cast0)(ids2 => cast0.join(ids2, "vec_id"))
     val codes = Dedup.materialize(encodeFast(cast, cbRows, numSub, subDim))
-    val adcAll = adcRelationOf(
-      queries.selectExpr("q_id", "CAST(q_vec AS ARRAY<DOUBLE>) AS qv"),
-      cbRows, subDim)
     ids.sorted.grouped(cap).map { chunk =>
       val adc = adcAll.filter(col("q_id").isin(chunk: _*))
       val short = wideAdcShortlist(codes, adc, numSub, shortlist,
@@ -1415,7 +1409,7 @@ object Pq {
     val cbRows = seededCodebook(emb, numSub, subDim, numCodes).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
     // ADC relation FIRST — carries the absent-query-id guard
-    val adcAll = adcRelationSharded(emb, qids, cbRows, subDim)
+    val adcAll = adcRelation(emb, qids, cbRows, numSub, subDim)
     val qsAll = emb.filter(col("vec_id").isin(qids: _*))
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
     val probesAll = Dedup.materialize(
@@ -1455,46 +1449,28 @@ object Pq {
     }
   }
 
-  /** All queries' ADC tables in ONE Spark job (|Q|·K·M rows of model
-    * state), keyed (q_id, m, code) → td. Computed BY Spark (not the
-    * driver) so the literal tables are bit-identical to the joined form
-    * in both engines — the searchRerank convention, batched. */
-  def adcTables(emb: DataFrame, qids: Seq[Long],
-                cbRows: Array[(Int, Long, Array[Double])],
-                subDim: Int): Map[(Long, Int, Long), Long] = {
+  /** The literal batch form's adist columns: one `adist_<q>` literal
+    * td-lookup column per query over bound code_0..code_{M-1}, its table
+    * from the [[adcTds]] kernel over ONE collect of the query vectors.
+    * Carries the |Q| and absent-query-id guards, so callers build these
+    * before any corpus work. */
+  private def adistCols(emb: DataFrame, qids: Seq[Long],
+                        cbRows: Array[(Int, Long, Array[Double])],
+                        numSub: Int, subDim: Int): Seq[String] = {
     requireBatchQids(qids, "batched PQ")
-    val qvs = emb.filter(col("vec_id").isin(qids: _*))
-      .selectExpr("vec_id AS q_id", "CAST(embedding AS ARRAY<DOUBLE>) AS qv")
-    val cbDf = emb.sparkSession.createDataFrame(
-      cbRows.toIndexedSeq.map { case (m, c, cw) => (m, c, cw.toSeq) })
-      .toDF("m", "code", "cw")
-    val td = cbDf.crossJoin(broadcast(qvs))
-      .selectExpr("q_id", "m", "code",
-        s"slice(qv, m * $subDim + 1, $subDim) AS qsub", "cw")
-      .selectExpr("q_id", "m", "code",
-        s"${sqDistExpr("qsub", "cw", subDim, offset = false)} AS td")
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)) -> r.getLong(3)).toMap
+    val qvs = collectQueryVecs(emb.filter(col("vec_id").isin(qids: _*))
+      .selectExpr("vec_id AS q_id", "CAST(embedding AS ARRAY<DOUBLE>) AS qv"),
+      numSub, subDim, "batched PQ").toMap
     // a query id absent from the corpus would otherwise just vanish from
     // the answer set (the isin filter drops it) — refuse loudly instead
-    val missing = qids.filterNot(q => td.contains((q, cbRows.head._1, cbRows.head._2)))
+    val missing = qids.filterNot(qvs.contains)
     require(missing.isEmpty,
       s"batched PQ: query ids absent from the corpus: ${missing.mkString(", ")}")
-    td
-  }
-
-  /** One literal-array td-lookup adist column per query (`adist_<q>`)
-    * over bound code_0..code_{M-1} columns. */
-  def adistCols(qids: Seq[Long], cbRows: Array[(Int, Long, Array[Double])],
-                td: Map[(Long, Int, Long), Long], numSub: Int): Seq[String] =
     qids.map { q =>
-      val sum = (0 until numSub).map { m =>
-        val tds = cbRows.filter(_._1 == m).sortBy(_._2)
-          .map { case (_, c, _) => s"${td((q, m, c))}L" }
-        s"element_at(array(${tds.mkString(", ")}), CAST(code_$m AS INT) + 1)"
-      }.mkString(" + ")
-      s"CAST($sum AS BIGINT) AS adist_$q"
+      val tds = adcTds(qvs(q), cbRows, numSub, subDim)
+      s"CAST(${adistLookupExpr(tds, numSub)} AS BIGINT) AS adist_$q"
     }
+  }
 
   /** stack() the per-query adist columns to (q_id, adist) rows — a narrow
     * generate, nothing shuffles. */
@@ -1532,16 +1508,16 @@ object Pq {
   def ivfpqBatch(emb: DataFrame, qids: Seq[Long], k: Int, numSub: Int,
                  subDim: Int, numCodes: Int, nProbe: Int, shortlist: Int): DataFrame = {
     import org.apache.spark.sql.functions.posexplode
-    // entry-point guard BEFORE any Spark work (r8 ADVICE: adcTables'
+    // entry-point guard BEFORE any Spark work (r8 ADVICE: adistCols'
     // internal guard fires only after the seededCodebook collect has
     // already paid a corpus job)
     requireBatchQids(qids, "ivfpqBatch")
     val cbRows = seededCodebook(emb, numSub, subDim, numCodes).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-    // ADC tables FIRST: adcTables holds the |Q| and absent-query-id
+    // ADC tables FIRST: adistCols holds the |Q| and absent-query-id
     // guards, and needs only (emb, qids, codebook) — refusing here costs
     // one tiny job instead of a probe pass + a union encode (r8 review)
-    val td = adcTables(emb, qids, cbRows, subDim)
+    val adist = adistCols(emb, qids, cbRows, numSub, subDim)
     val qs = emb.filter(col("vec_id").isin(qids: _*))
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
     val probes = Dedup.materialize(Ivf.probeBatch(Ivf.centroids(emb), qs, nProbe))
@@ -1551,7 +1527,7 @@ object Pq {
     val codes = Dedup.materialize(
       encodeFast(body, cbRows, numSub, subDim, carry = Seq("vec_id", "label")))
     val short = codes
-      .selectExpr(Seq("vec_id", "label") ++ adistCols(qids, cbRows, td, numSub): _*)
+      .selectExpr(Seq("vec_id", "label") ++ adist: _*)
       .selectExpr("vec_id", "label", stackExpr(qids))
       .filter(col("vec_id") =!= col("q_id"))
       // per-(row, query) membership: the row's cluster must be one of THIS
@@ -1580,8 +1556,8 @@ object Pq {
     requireWideQids(qids, "ivfpqBatchWide")
     val cbRows = seededCodebook(emb, numSub, subDim, numCodes).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-    // ADC relation FIRST — carries the |Q| and absent-query-id guards
-    val adc = adcRelation(emb, qids, cbRows, subDim)
+    // ADC relation FIRST — carries the absent-query-id guard
+    val adc = adcRelation(emb, qids, cbRows, numSub, subDim)
     val qs = emb.filter(col("vec_id").isin(qids: _*))
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
     val probes = Dedup.materialize(Ivf.probeBatch(Ivf.centroids(emb), qs, nProbe))

@@ -173,11 +173,13 @@ class PlanAuditSpec extends SparkSpec {
     assert(p2.contains("nearest_centroid_long"), p2.take(3000))
     assert(p2.contains("TakeOrderedAndProject") && !p2.contains("Window"), p2.take(3000))
     // knn_pq_batch_wide_2048 inherits A21c's whole O(1)-in-|Q| contract
-    // at width: no per-query projection columns, exactly two materialized
-    // scans, one BNLJ of the 8-row ADC relation, two partial k-heaps
+    // at width: no per-query projection columns, exactly one materialized
+    // scan (codes) and one local relation (the driver-built ADC table),
+    // one BNLJ of the 8-row ADC relation, two partial k-heaps
     val p3 = plan("knn_pq_batch_wide_2048")
     assert(!p3.contains("adist_"), s"per-query literal columns leaked\n${p3.take(3000)}")
-    assert("Scan ExistingRDD".r.findAllIn(p3).length === 2, p3.take(3000))
+    assert("Scan ExistingRDD".r.findAllIn(p3).length === 1, p3.take(3000))
+    assert("LocalTableScan".r.findAllIn(p3).length === 1, p3.take(3000))
     assert(p3.contains("BroadcastNestedLoopJoin"), p3.take(3000))
     assert("partial_top_k_hits".r.findAllIn(p3).length === 2, p3.take(3000))
     assert(!p3.contains("Window") && !p3.contains("SortMergeJoin"), p3.take(3000))
@@ -619,13 +621,16 @@ class PlanAuditSpec extends SparkSpec {
   test("knn_pq_batch_wide: O(1) plan in |Q| — joined ADC, one code scan, k-heaps") {
     // the wide contract (r8 verdict next #1): NO per-query projection
     // columns (the literal form's adist_<q>), the ADC rides as ONE
-    // broadcast relation joined to ONE materialized code scan
-    // (BroadcastNestedLoopJoin of the |Q|-row relation), and both cuts
-    // stay partial k-heap aggregates — never a window over scored rows
+    // broadcast local relation (built on the driver) joined to ONE
+    // materialized code scan (BroadcastNestedLoopJoin of the |Q|-row
+    // relation), and both cuts stay partial k-heap aggregates — never a
+    // window over scored rows
     val p = plan("knn_pq_batch_wide")
     assert(!p.contains("adist_"), s"per-query literal columns leaked\n${p.take(3000)}")
-    assert("Scan ExistingRDD".r.findAllIn(p).length === 2,
-      s"expected exactly two materialized scans (codes + ADC relation)\n${p.take(3000)}")
+    assert("Scan ExistingRDD".r.findAllIn(p).length === 1,
+      s"expected exactly one materialized scan (codes)\n${p.take(3000)}")
+    assert("LocalTableScan".r.findAllIn(p).length === 1,
+      s"expected exactly one local relation (ADC)\n${p.take(3000)}")
     assert(p.contains("BroadcastNestedLoopJoin"), p.take(3000))
     assert("partial_top_k_hits".r.findAllIn(p).length === 2, p.take(3000))
     assert(!p.contains("Window"), p.take(3000))
@@ -635,13 +640,15 @@ class PlanAuditSpec extends SparkSpec {
   test("hybrid_knn_pq_batch_wide: keep-pruned scan keeps the wide O(1) shape") {
     // the filtered wide form must inherit A21c's whole contract: the keep
     // join happens INSIDE the materialized encode, so the serving plan is
-    // still exactly two materialized scans (pruned codes + ADC relation),
-    // one BNLJ of the |Q|-row broadcast relation, two partial k-heaps,
-    // and never a Window/SMJ over scored rows
+    // still exactly one materialized scan (pruned codes) plus one local
+    // ADC relation, one BNLJ of the |Q|-row broadcast relation, two
+    // partial k-heaps, and never a Window/SMJ over scored rows
     val p = plan("hybrid_knn_pq_batch_wide")
     assert(!p.contains("adist_"), s"per-query literal columns leaked\n${p.take(3000)}")
-    assert("Scan ExistingRDD".r.findAllIn(p).length === 2,
-      s"expected exactly two materialized scans (codes + ADC relation)\n${p.take(3000)}")
+    assert("Scan ExistingRDD".r.findAllIn(p).length === 1,
+      s"expected exactly one materialized scan (pruned codes)\n${p.take(3000)}")
+    assert("LocalTableScan".r.findAllIn(p).length === 1,
+      s"expected exactly one local relation (ADC)\n${p.take(3000)}")
     assert(p.contains("BroadcastNestedLoopJoin"), p.take(3000))
     assert("partial_top_k_hits".r.findAllIn(p).length === 2, p.take(3000))
     assert(!p.contains("Window"), p.take(3000))
@@ -742,5 +749,20 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("Scan parquet"),
       s"a rollup level rescans the corpus\n${p.take(3000)}")
     assert(p.contains("Scan ExistingRDD"), p.take(3000))
+  }
+
+  test("spreadHeavyKernel: a cached body with >= defaultParallelism partitions plans no extra Exchange") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val target = spark.sparkContext.defaultParallelism
+    val spread = spark.range(0, 64, 1, target).toDF("vec_id").cache()
+    val single = spark.range(0, 64, 1, 1).toDF("vec_id").cache()
+    try {
+      assert(spread.count() == 64 && single.count() == 64) // load both caches
+      def exchanges(df: org.apache.spark.sql.DataFrame): Int =
+        graft.operators.Pq.spreadHeavyKernel(df, opsPerRow = 1L << 20)
+          .queryExecution.sparkPlan.collect { case e: ShuffleExchangeLike => e }.size
+      assert(exchanges(spread) === 0, "a well-partitioned cached body was re-spread")
+      assert(exchanges(single) === 1, "a one-partition cached body must still spread")
+    } finally { spread.unpersist(); single.unpersist() }
   }
 }
